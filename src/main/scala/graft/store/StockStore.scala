@@ -73,15 +73,21 @@ object StockStore {
       schema: org.apache.spark.sql.types.StructType): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(tablePath(root, dt))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    readSnapshotOrEmpty(spark, fs, p, TableCache.snapshot(fs, p), schema)
+  }
+
+  /** [[readOrEmpty]] over a snapshot already in hand — the upsert lists
+    * the commit log once per batch and reads back through this. */
+  private def readSnapshotOrEmpty(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+      tp: org.apache.hadoop.fs.Path, snap: Option[TableCache.Snapshot],
+      schema: org.apache.spark.sql.types.StructType): DataFrame = {
     def empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    if (!fs.exists(p)) empty
-    else committedState(fs, p) match {
-      case Some((_, Nil)) => empty // commit log exists but nothing committed yet
-      // reuse the state just read instead of a second commits() pass —
-      // the streaming sink calls this every micro-batch
-      case Some(st) => tableFromState(spark, p, st)
-      case None => table(spark, root, dt)
+    snap match {
+      case Some(s) if s.files.nonEmpty => TableCache.read(spark, fs, tp, s)
+      case Some(_) => empty // commit log exists but nothing committed yet
+      case None if !fs.exists(tp) => empty
+      case None => legacyTable(spark, tp)
     }
   }
 
@@ -230,11 +236,14 @@ object StockStore {
     // history is possible) also degrades to ticker-only; the marker is
     // stamped at this batch's publish, so steady-state streaming pays
     // the full tuple prune from batch 2 on.
-    val markerFs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tzConsistent = readTzMarker(markerFs, tzMarkerPath(root, dt)) match {
+    // One commit-log listing per batch: the tz check and the read-back
+    // below both use it (single writer per table: nothing commits between).
+    val tp = new org.apache.hadoop.fs.Path(tablePath(root, dt))
+    val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val before = TableCache.snapshot(fs, tp)
+    val tzConsistent = readTzMarker(spark, fs, tp, before, tzMarkerPath(root, dt)) match {
       case Some(tz) => tz == exchangeTz
-      case None => !markerFs.exists(new org.apache.hadoop.fs.Path(tablePath(root, dt)))
+      case None => !fs.exists(tp)
     }
     val pruneCols = if (tzConsistent) partCols else Seq("ticker")
     // The event-time window bounds ride the SAME job as the tuple
@@ -328,7 +337,7 @@ object StockStore {
         case _ => None
       }
     }
-    val existingRaw0 = readOrEmpty(spark, root, dt,
+    val existingRaw0 = readSnapshotOrEmpty(spark, fs, tp, before,
       deduped.withColumn("version", lit(1)).schema)
     val existingRaw1 = partitionPrune
       .filter(_ => existingRaw0.columns.contains(pruneCols.last))
@@ -436,9 +445,6 @@ object StockStore {
     var writtenFinal = written
     var cheapStats: Option[UpsertStats] = None
     if (!collectCounts || written > 0) {
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tp = new org.apache.hadoop.fs.Path(tablePath(root, dt))
       val sp = new org.apache.hadoop.fs.Path(statsLogPath(root, dt))
       val stageId = java.util.UUID.randomUUID().toString
       val stageData = new org.apache.hadoop.fs.Path(root, s"${stagePrefix(dt)}$stageId-data")
@@ -502,9 +508,9 @@ object StockStore {
             .partitionBy(partCols: _*)
             .parquet(stageData.toString)
         }
-        val dataRel = TableLog.promote(fs, stageData, tp)
+        val data = TableLog.promoteWithStatus(fs, stageData, tp)
         val statsRel = TableLog.promote(fs, stageStats, sp)
-        TableLog.publish(fs, tp, dataRel, statsRel)
+        TableLog.publish(fs, tp, data.map(_._1), statsRel)
         // Manifest squash: a streaming sink lands one manifest per
         // micro-batch and every read pays an O(commits) listing. Each
         // AutoSquashEvery commits, fold the live set into one reset
@@ -512,6 +518,9 @@ object StockStore {
         // commit listing stays O(1) however long the stream runs.
         if (TableLog.maybeCheckpoint(fs, tp, AutoSquashEvery))
           TableLog.vacuum(fs, tp, sp)
+        // the next read (or this sink's next read-back) lists nothing and
+        // infers nothing unless this batch brought a new column
+        TableCache.committed(spark, fs, tp, before, data.map(_._2), out.schema)
       }
       fs.delete(stageData, true)
       fs.delete(stageStats, true)
@@ -525,44 +534,28 @@ object StockStore {
   /** Read the stored table (post-merge). Manifest-aware: only files a
     * committed manifest references are visible (a crashed half-written
     * batch is not); tables without a commit log (legacy layout) read the
-    * directory. `mergeSchema` unifies files from before/after any
-    * dynamically-added column (A10): old rows carry null in the new
-    * column. `basePath` keeps partition-column inference — and therefore
-    * Catalyst partition pruning — identical to a plain directory read. */
-  // Unified-schema memo per (table, last commit id): mergeSchema reads
-  // every file's footer on every call — O(files) per read, per
-  // micro-batch on the streaming path. The union schema only changes
-  // when a commit lands (evolution), so one mergeSchema inference per
-  // commit id is cached and later reads pass the schema explicitly (the
-  // parquet reader null-fills columns a file lacks, which is exactly the
-  // append-only evolution semantics).
-  private val tableSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, org.apache.spark.sql.types.StructType)]()
-
+    * directory. The schema is the union over every file (A10): rows
+    * written before a dynamically-added column carry null in it.
+    * Partition columns — and so Catalyst partition pruning — are exactly
+    * those of a plain directory read.
+    *
+    * The relation comes from [[TableCache]]: committed files' statuses
+    * and the union schema are remembered per table and snapshot, so a
+    * steady-state read neither lists the files (a Spark job per read past
+    * 32 files) nor re-reads their footers (a `mergeSchema` job). Only a
+    * commit that adds a column, or a first read in the process, infers. */
   def table(spark: SparkSession, root: String, dt: StockDataType): DataFrame = {
     val tp = new org.apache.hadoop.fs.Path(tablePath(root, dt))
     val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    committedState(fs, tp) match {
-      case Some(st @ (_, files)) if files.nonEmpty => tableFromState(spark, tp, st)
-      case _ =>
-        spark.read.option("mergeSchema", "true").parquet(tablePath(root, dt))
+    TableCache.snapshot(fs, tp) match {
+      case Some(s) if s.files.nonEmpty => TableCache.read(spark, fs, tp, s)
+      case _ => legacyTable(spark, tp)
     }
   }
 
-  private def tableFromState(spark: SparkSession, tp: org.apache.hadoop.fs.Path,
-      state: (Long, Seq[String])): DataFrame = {
-    val (lastId, files) = state
-    val key = tp.toString
-    val cached = tableSchemaCache.get(key)
-    if (cached != null && cached._1 == lastId)
-      spark.read.schema(cached._2).option("basePath", tp.toString).parquet(files: _*)
-    else {
-      val df = spark.read.option("mergeSchema", "true")
-        .option("basePath", tp.toString).parquet(files: _*)
-      tableSchemaCache.put(key, (lastId, df.schema))
-      df
-    }
-  }
+  /** Directory read of a table without a commit log. */
+  private def legacyTable(spark: SparkSession, tp: org.apache.hadoop.fs.Path): DataFrame =
+    spark.read.option("mergeSchema", "true").parquet(tp.toString)
 
   /** Time-travel read: the table AS OF `commitId` — byte-identical to
     * what a reader saw after that commit published, however many batches
@@ -578,17 +571,16 @@ object StockStore {
       commitId: Long): DataFrame = {
     val tp = new org.apache.hadoop.fs.Path(tablePath(root, dt))
     val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val all = TableLog.commits(fs, tp)
-    require(all.nonEmpty, s"${dt.name} has no commit log (legacy table) — no history to travel")
-    require(all.exists(_.id == commitId),
-      s"unknown commit $commitId for ${dt.name}; have ${all.map(_.id).mkString(",")}")
-    val files = TableLog.effectiveAt(all, commitId)._1
-      .map(r => new org.apache.hadoop.fs.Path(tp, r).toString)
-    if (files.isEmpty)
+    val log = TableLog.listed(fs, tp)
+    require(log.nonEmpty, s"${dt.name} has no commit log (legacy table) — no history to travel")
+    require(log.exists(_.commit.id == commitId),
+      s"unknown commit $commitId for ${dt.name}; have ${log.map(_.commit.id).mkString(",")}")
+    // a snapshot never changes: its schema is memoized under its own key
+    val snap = TableCache.snapshotAt(fs, tp, log, commitId)
+    if (snap.files.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         table(spark, root, dt).schema)
-    else spark.read.option("mergeSchema", "true")
-      .option("basePath", tp.toString).parquet(files: _*)
+    else TableCache.read(spark, fs, tp, snap)
   }
 
   /** Commit ids currently in the log for `dt` (ascending) — the pinnable
@@ -597,18 +589,6 @@ object StockStore {
     val tp = new org.apache.hadoop.fs.Path(tablePath(root, dt))
     val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     TableLog.commits(fs, tp).map(_.id)
-  }
-
-  /** One snapshot of the commit log: (last commit id, absolute committed
-    * data files), or None if the table predates the log. Reading id and
-    * file set from the SAME listing keeps the schema memo consistent when
-    * a commit lands concurrently with a read. */
-  private def committedState(fs: org.apache.hadoop.fs.FileSystem,
-      tp: org.apache.hadoop.fs.Path): Option[(Long, Seq[String])] = {
-    val cs = TableLog.commits(fs, tp)
-    if (cs.isEmpty) None
-    else Some((cs.last.id, TableLog.effectiveFrom(cs)._1
-      .map(r => new org.apache.hadoop.fs.Path(tp, r).toString)))
   }
 
   /** Compact the small files that per-micro-batch appends accumulate
@@ -649,13 +629,15 @@ object StockStore {
       .coalesce(1)
       .write.parquet(stageStats.toString)
 
-    val dataRel = TableLog.promote(fs, stageData, tp)
+    val data = TableLog.promoteWithStatus(fs, stageData, tp)
     val statsRel = TableLog.promote(fs, stageStats, sp)
-    TableLog.publish(fs, tp, dataRel, statsRel, reset = true)
+    TableLog.publish(fs, tp, data.map(_._1), statsRel, reset = true)
     fs.delete(stageData, true)
     fs.delete(stageStats, true)
     TableLog.vacuum(fs, tp, sp, stageRoot = Some(new Path(root)),
       stagePrefix = stagePrefix(dt))
+    // the reset's file set is exactly the rewritten files
+    TableCache.committed(spark, fs, tp, None, data.map(_._2), df.schema)
     rows
   }
 
@@ -689,27 +671,23 @@ object StockStore {
     new org.apache.hadoop.fs.Path(s"$root/${dt.name}__tz")
 
   // The marker is immutable once written (create-if-absent, never
-  // modified): memoize positive reads so the streaming sink pays the
-  // exists+open+read round-trip once per table, not once per micro-batch.
-  // Absence is NOT cached — the marker lands at this table's first
-  // publish.
-  private val tzMarkerCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def readTzMarker(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Option[String] = {
-    val key = fs.makeQualified(p).toString
-    val hit = tzMarkerCache.get(key)
-    if (hit != null) Some(hit)
-    else if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val tz =
-        try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).trim
+  // modified): [[TableCache.tz]] remembers a positive read while the
+  // manifest it was read beside is still listed, so the streaming sink
+  // pays the exists+open+read round-trip once per table (and once per
+  // manifest squash), not once per micro-batch — and a table recreated
+  // at the same path reads its own marker. A table without a commit log
+  // reads the marker each time.
+  private def readTzMarker(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+      tp: org.apache.hadoop.fs.Path, snap: Option[TableCache.Snapshot],
+      p: org.apache.hadoop.fs.Path): Option[String] =
+    TableCache.tz(spark, fs, tp, snap.map(_.log).getOrElse(Nil)) {
+      if (!fs.exists(p)) None
+      else {
+        val in = fs.open(p)
+        try Some(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).trim)
         finally in.close()
-      tzMarkerCache.put(key, tz)
-      Some(tz)
+      }
     }
-  }
 
   private def writeTzMarkerIfAbsent(fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path, tz: String): Unit =

@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 import java.nio.charset.StandardCharsets
 
@@ -51,6 +51,14 @@ object TableLog {
   final case class Commit(id: Long, reset: Boolean,
       dataFiles: Seq[String], statsFiles: Seq[String])
 
+  /** A valid commit together with the (modification time, length) its
+    * directory listing reported. `key` names the manifest FILE, not just
+    * the id: a table deleted and recreated at the same path restarts its
+    * ids at 0, and a memo keyed by id alone would serve the old table. */
+  final case class Listed(commit: Commit, mtime: Long, len: Long) {
+    def key: String = s"${commit.id}@$mtime:$len"
+  }
+
   private def commitsDir(tablePath: Path) = new Path(tablePath, "_commits")
 
   /** True iff at least one VALID published commit exists. Checking for
@@ -80,27 +88,35 @@ object TableLog {
   }
 
   /** Published manifests are IMMUTABLE (created once at their final path,
-    * never modified), so a successful parse can be memoized by qualified
-    * path: [[commits]] then costs one directory listing instead of
-    * O(live manifests) file opens — which a streaming upsert sink pays
-    * several times per micro-batch (readOrEmpty, read-back, exists,
-    * maybeCheckpoint), ramping with commit count until the next squash.
-    * Only Some results are cached: a torn manifest may be a concurrent
-    * writer mid-create whose `end` sentinel lands later (exclusive-create
-    * seam), so None must be re-read. Vacuumed manifests simply stop being
-    * listed; the cap-clear bounds memory for very long-lived processes. */
-  private val parseCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Commit]()
-  private def parse(fs: FileSystem, p: Path): Option[Commit] = {
-    val key = fs.makeQualified(p).toString
+    * never modified), so a successful parse is memoized by qualified path:
+    * [[commits]] then costs one directory listing instead of O(live
+    * manifests) file opens — which a streaming upsert sink pays several
+    * times per micro-batch. A hit must also match the (modification time,
+    * length) the listing reports: a table deleted and recreated at the
+    * same path restarts its ids at 0, so the NAME alone would serve the
+    * old table's commits. Only Some results are cached: a torn manifest
+    * may be a concurrent writer mid-create whose `end` sentinel lands
+    * later (exclusive-create seam), so None must be re-read. Least
+    * recently used entries are evicted past [[ParseCacheMax]]. */
+  private val ParseCacheMax = 65536
+  private val parseCache = lru[String, Listed](ParseCacheMax)
+
+  /** Bounded least-recently-used map, safe for concurrent use. */
+  private[store] def lru[K, V](cap: Int): java.util.Map[K, V] =
+    java.util.Collections.synchronizedMap(
+      new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+        override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
+          size() > cap
+      })
+
+  private def parse(fs: FileSystem, st: FileStatus): Option[Listed] = {
+    val key = fs.makeQualified(st.getPath).toString
     val hit = parseCache.get(key)
-    if (hit != null) Some(hit)
+    if (hit != null && hit.mtime == st.getModificationTime && hit.len == st.getLen) Some(hit)
     else {
-      val r = parseUncached(fs, p)
-      r.foreach { c =>
-        if (parseCache.size > 65536) parseCache.clear()
-        parseCache.put(key, c)
-      }
+      val r = parseUncached(fs, st.getPath)
+        .map(Listed(_, st.getModificationTime, st.getLen))
+      r.foreach(parseCache.put(key, _))
       r
     }
   }
@@ -118,12 +134,16 @@ object TableLog {
 
   /** All VALID commits in order (torn manifests skipped), or empty if
     * the table has no log. */
-  def commits(fs: FileSystem, tablePath: Path): Seq[Commit] = {
+  def commits(fs: FileSystem, tablePath: Path): Seq[Commit] =
+    listed(fs, tablePath).map(_.commit)
+
+  /** [[commits]] with each manifest's listing stamp (see [[Listed]]). */
+  def listed(fs: FileSystem, tablePath: Path): Seq[Listed] = {
     val dir = commitsDir(tablePath)
     if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).map(_.getPath)
-      .filter(_.getName.endsWith(".commit"))
-      .sortBy(_.getName)
+    else fs.listStatus(dir)
+      .filter(_.getPath.getName.endsWith(".commit"))
+      .sortBy(_.getPath.getName)
       .flatMap(parse(fs, _)).toSeq
   }
 
@@ -242,18 +262,24 @@ object TableLog {
     * relative (partition) layout; returns the target-root-relative paths.
     * File names are Spark task outputs (job-UUID unique), so moves never
     * overwrite. */
-  def promote(fs: FileSystem, stagingDir: Path, targetDir: Path): Seq[String] = {
-    val staged = listFilesRecursively(fs, stagingDir)
-      .filter(p => p.getName.endsWith(".parquet"))
-    staged.map { p =>
-      val rel = relativize(stagingDir, p)
-      val dest = new Path(targetDir, rel)
-      fs.mkdirs(dest.getParent)
-      if (!fs.rename(p, dest))
-        throw new java.io.IOException(s"promote failed: $p -> $dest")
-      rel
-    }
-  }
+  def promote(fs: FileSystem, stagingDir: Path, targetDir: Path): Seq[String] =
+    promoteWithStatus(fs, stagingDir, targetDir).map(_._1)
+
+  /** [[promote]], also returning each file's status at its final
+    * (qualified) path, taken from the staging listing — a rename keeps the
+    * length, so a reader can be handed the status without listing again. */
+  def promoteWithStatus(fs: FileSystem, stagingDir: Path,
+      targetDir: Path): Seq[(String, FileStatus)] =
+    statusesRecursively(fs, stagingDir).filter(_.getPath.getName.endsWith(".parquet"))
+      .map { st =>
+        val rel = relativize(stagingDir, st.getPath)
+        val dest = new Path(targetDir, rel)
+        fs.mkdirs(dest.getParent)
+        if (!fs.rename(st.getPath, dest))
+          throw new java.io.IOException(s"promote failed: ${st.getPath} -> $dest")
+        rel -> new FileStatus(st.getLen, false, st.getReplication, st.getBlockSize,
+          st.getModificationTime, fs.makeQualified(dest))
+      }
 
   /** Parquet files already present under `dir` (root-relative) — folded
     * into the first commit when migrating a plain-append table. */
@@ -262,11 +288,14 @@ object TableLog {
       .filter(_.getName.endsWith(".parquet"))
       .map(relativize(dir, _))
 
-  def listFilesRecursively(fs: FileSystem, dir: Path): Seq[Path] = {
+  def listFilesRecursively(fs: FileSystem, dir: Path): Seq[Path] =
+    statusesRecursively(fs, dir).map(_.getPath)
+
+  private def statusesRecursively(fs: FileSystem, dir: Path): Seq[FileStatus] = {
     if (!fs.exists(dir)) return Seq.empty
     val it = fs.listFiles(dir, true)
-    val out = Seq.newBuilder[Path]
-    while (it.hasNext) out += it.next().getPath
+    val out = Seq.newBuilder[FileStatus]
+    while (it.hasNext) out += it.next()
     out.result()
   }
 
