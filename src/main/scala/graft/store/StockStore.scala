@@ -236,12 +236,12 @@ object StockStore {
     // history is possible) also degrades to ticker-only; the marker is
     // stamped at this batch's publish, so steady-state streaming pays
     // the full tuple prune from batch 2 on.
-    // One commit-log listing per batch: the tz check and the read-back
-    // below both use it (single writer per table: nothing commits between).
+    // One commit-log listing per batch: the read-back below reads this
+    // snapshot, and the publish hands it to the schema memo.
     val tp = new org.apache.hadoop.fs.Path(tablePath(root, dt))
     val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val before = TableCache.snapshot(fs, tp)
-    val tzConsistent = readTzMarker(spark, fs, tp, before, tzMarkerPath(root, dt)) match {
+    val tzConsistent = readTzMarker(fs, tzMarkerPath(root, dt)) match {
       case Some(tz) => tz == exchangeTz
       case None => !fs.exists(tp)
     }
@@ -670,23 +670,15 @@ object StockStore {
   private def tzMarkerPath(root: String, dt: StockDataType) =
     new org.apache.hadoop.fs.Path(s"$root/${dt.name}__tz")
 
-  // The marker is immutable once written (create-if-absent, never
-  // modified): [[TableCache.tz]] remembers a positive read while the
-  // manifest it was read beside is still listed, so the streaming sink
-  // pays the exists+open+read round-trip once per table (and once per
-  // manifest squash), not once per micro-batch — and a table recreated
-  // at the same path reads its own marker. A table without a commit log
-  // reads the marker each time.
-  private def readTzMarker(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-      tp: org.apache.hadoop.fs.Path, snap: Option[TableCache.Snapshot],
+  // Read on every upsert, never memoized: a table deleted and recreated
+  // at the same path may carry a different marker.
+  private def readTzMarker(fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path): Option[String] =
-    TableCache.tz(spark, fs, tp, snap.map(_.log).getOrElse(Nil)) {
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try Some(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).trim)
-        finally in.close()
-      }
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).trim)
+      finally in.close()
     }
 
   private def writeTzMarkerIfAbsent(fs: org.apache.hadoop.fs.FileSystem,

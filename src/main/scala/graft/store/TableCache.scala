@@ -8,32 +8,28 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Per-table snapshot cache behind [[StockStore]]'s reads: the relation
-  * over a committed file set is built straight from the commit log, with
-  * no directory listing and no schema inference in steady state.
+/** Snapshot cache behind [[StockStore]]'s reads: the relation over a
+  * committed file set is built straight from the commit log, with no
+  * directory listing and no schema inference in steady state.
   *
   *  - File statuses: `spark.read.parquet(files)` lists every file again
   *    (a Spark job of one task per file past
   *    `spark.sql.sources.parallelPartitionDiscovery.threshold`, 32 by
   *    default) and hands each call a fresh [[FileStatusCache]] client, so
-  *    nothing carries over between reads. Here each table keeps one
-  *    client. Committed file names are unique and never rewritten, so a
+  *    nothing carries over between reads. Here one client serves the
+  *    process. Committed file names are unique and never rewritten, so a
   *    cached status cannot go stale for any path a manifest lists, and
   *    [[committed]] seeds the statuses of the files a writer just promoted:
   *    a read after a write lists nothing.
   *  - Union schema: `mergeSchema` reads every file's footer in a Spark
   *    job. The union only changes when a commit adds a column, so it is
-  *    memoized per snapshot (keyed by the snapshot's last manifest,
-  *    [[TableLog.Listed.key]]), advanced by [[committed]] when the new
-  *    files add no column, and seeded by a table's first commit. A commit
-  *    that adds a column (A10 dynamic schema) leaves the new snapshot
-  *    unmemoized: the next read infers once.
-  *  - Partitioning tz: the tz marker [[StockStore]] reads before each
-  *    upsert, remembered while the manifest it was read beside is listed.
-  *
-  * Every key names a manifest FILE (id, modification time, length), so a
-  * table deleted and recreated at the same path in one process — commit
-  * ids restart at 0 — misses every memo of the old table.
+  *    memoized per snapshot (keyed by the table and the snapshot's last
+  *    manifest, [[TableLog.Listed.key]], which names the table
+  *    incarnation: a table recreated at the same path misses), advanced by
+  *    [[committed]] when this writer's new files add no column, and seeded
+  *    by a table's first commit. A commit that adds a column (A10 dynamic
+  *    schema), or a snapshot holding files another writer committed,
+  *    stays unmemoized: the next read infers once.
   */
 private[store] object TableCache {
 
@@ -58,34 +54,30 @@ private[store] object TableCache {
     Snapshot(log, TableLog.effectiveFrom(log.map(_.commit))._1
       .map(r => fs.makeQualified(new Path(tp, r))))
 
-  private final class Entry(val statuses: FileStatusCache) {
-    /** union schema per snapshot key: the head and any pinned snapshots */
-    val schemas: java.util.Map[String, StructType] = TableLog.lru(16)
-    /** (key of the manifest it was read beside, tz) */
-    @volatile var tz: Option[(String, String)] = None
-  }
+  /** union schema per (qualified table path, snapshot key): each table's
+    * head and any pinned snapshots */
+  private val schemas = TableLog.lru[(String, String), StructType](1024)
+  private def schemaKey(fs: FileSystem, tp: Path, snap: Snapshot) =
+    (fs.makeQualified(tp).toString, snap.key)
 
-  private val entries = TableLog.lru[String, Entry](256)
-  private def entry(spark: SparkSession, fs: FileSystem, tp: Path): Entry =
-    entries.synchronized {
-      val k = fs.makeQualified(tp).toString
-      Option(entries.get(k)).getOrElse {
-        val e = new Entry(FileStatusCache.getOrCreate(spark))
-        entries.put(k, e)
-        e
-      }
+  @volatile private var shared: FileStatusCache = _
+  private def statuses(spark: SparkSession): FileStatusCache = {
+    if (shared == null) synchronized {
+      if (shared == null) shared = FileStatusCache.getOrCreate(spark)
     }
+    shared
+  }
 
   /** The table as of `snap` (non-empty file set). `basePath` keeps
     * partition columns — and so Catalyst partition pruning — exactly as
     * on a plain directory read; filters push to the parquet scan. */
   def read(spark: SparkSession, fs: FileSystem, tp: Path, snap: Snapshot): DataFrame = {
-    val e = entry(spark, fs, tp)
-    Option(e.schemas.get(snap.key)) match {
-      case Some(schema) => relation(spark, fs, tp, snap.files, e.statuses, Some(schema))
+    val key = schemaKey(fs, tp, snap)
+    Option(schemas.get(key)) match {
+      case Some(schema) => relation(spark, fs, tp, snap.files, Some(schema))
       case None =>
-        val df = relation(spark, fs, tp, snap.files, e.statuses, None)
-        e.schemas.put(snap.key, df.schema)
+        val df = relation(spark, fs, tp, snap.files, None)
+        schemas.put(key, df.schema)
         df
     }
   }
@@ -97,9 +89,9 @@ private[store] object TableCache {
     * schema, `mergeSchema` inference over every footer), over the cached
     * statuses instead of a fresh listing. */
   private def relation(spark: SparkSession, fs: FileSystem, tp: Path, files: Seq[Path],
-      statuses: FileStatusCache, schema: Option[StructType]): DataFrame = {
+      schema: Option[StructType]): DataFrame = {
     val opts = options(fs, tp)
-    val index = new InMemoryFileIndex(spark, files, opts, schema, statuses)
+    val index = new InMemoryFileIndex(spark, files, opts, schema, statuses(spark))
     val format = new ParquetFileFormat
     val partition = index.partitionSchema
     val resolver = SQLConf.get.resolver
@@ -116,15 +108,20 @@ private[store] object TableCache {
     * the statuses of the data files it added (from [[TableLog
     * .promoteWithStatus]]) and `written` the schema of the frame written
     * into them (partition columns included). `before` is the snapshot
-    * the writer read before committing. */
+    * the writer read before committing (None for a reset that replaces
+    * the whole file set). The schema memo moves to the new snapshot only
+    * when it holds exactly `before`'s files plus `promoted`: a commit by
+    * another writer in between (another process may publish to the same
+    * log) could have added a column this writer never saw. */
   def committed(spark: SparkSession, fs: FileSystem, tp: Path,
       before: Option[Snapshot], promoted: Seq[FileStatus], written: StructType): Unit = {
-    val e = entry(spark, fs, tp)
-    promoted.foreach(st => e.statuses.putLeafFiles(st.getPath, Array(st)))
-    val after = snapshot(fs, tp)
-    if (promoted.nonEmpty) after.foreach { a =>
+    val cache = statuses(spark)
+    promoted.foreach(st => cache.putLeafFiles(st.getPath, Array(st)))
+    val prior = before.fold(Seq.empty[Path])(_.files)
+    val ours = (prior ++ promoted.map(_.getPath)).toSet
+    if (promoted.nonEmpty) snapshot(fs, tp).filter(_.files.toSet == ours).foreach { a =>
       val partition = new InMemoryFileIndex(spark, promoted.map(_.getPath),
-        options(fs, tp), None, e.statuses).partitionSchema
+        options(fs, tp), None, cache).partitionSchema
       val resolver = SQLConf.get.resolver
       val data = StructType(GraftInternals.asNullable(written)
         .filterNot(f => partition.exists(p => resolver(p.name, f.name))))
@@ -132,24 +129,11 @@ private[store] object TableCache {
       val next =
         // the table is exactly the new files (a first commit, or a
         // compaction's reset): their schema IS the union
-        if (a.files.toSet == promoted.map(_.getPath).toSet) Some(StructType(added))
+        if (prior.isEmpty) Some(StructType(added))
         // otherwise the union stands while every new column is known
-        else before.flatMap(b => Option(e.schemas.get(b.key))).filter(memo =>
+        else before.flatMap(b => Option(schemas.get(schemaKey(fs, tp, b)))).filter(memo =>
           added.forall(f => memo.exists(m => m.name == f.name && m.dataType == f.dataType)))
-      next.foreach(e.schemas.put(a.key, _))
-    }
-  }
-
-  /** The tz marker for `tp`, read by `load` only when no memo holds for
-    * the listing `log`. Absence is never memoized: the marker lands at
-    * the table's first publish. */
-  def tz(spark: SparkSession, fs: FileSystem, tp: Path, log: Seq[TableLog.Listed])(
-      load: => Option[String]): Option[String] = {
-    val e = entry(spark, fs, tp)
-    e.tz.collect { case (anchor, tz) if log.exists(_.key == anchor) => tz }.orElse {
-      val tz = load
-      for (t <- tz; head <- log.lastOption) e.tz = Some((head.key, t))
-      tz
+      next.foreach(schemas.put(schemaKey(fs, tp, a), _))
     }
   }
 }

@@ -32,9 +32,10 @@ import java.nio.charset.StandardCharsets
   * object stores — so multi-writer safety does not rest on an external
   * scheduler at the object-store design point.
   *
-  * Format: line-oriented (one `kind<TAB>root-relative-path` per line),
-  * closed by a bare `end` line — partition path segments are URL-encoded
-  * by Spark, so paths are tab/newline-free by construction. The sentinel
+  * Format: line-oriented (one `kind<TAB>root-relative-path` per line,
+  * plus one `table<TAB>incarnation-id` line), closed by a bare `end`
+  * line — partition path segments are URL-encoded by Spark, so paths
+  * are tab/newline-free by construction. The sentinel
   * makes a manifest self-validating: it is written DIRECTLY at its final
   * path with `create(overwrite = false)`, so a concurrent writer racing
   * the same id FAILS (and retries with the next id) instead of silently
@@ -51,12 +52,13 @@ object TableLog {
   final case class Commit(id: Long, reset: Boolean,
       dataFiles: Seq[String], statsFiles: Seq[String])
 
-  /** A valid commit together with the (modification time, length) its
-    * directory listing reported. `key` names the manifest FILE, not just
-    * the id: a table deleted and recreated at the same path restarts its
-    * ids at 0, and a memo keyed by id alone would serve the old table. */
-  final case class Listed(commit: Commit, mtime: Long, len: Long) {
-    def key: String = s"${commit.id}@$mtime:$len"
+  /** A valid commit together with the table incarnation its manifest
+    * names (see [[publish]]). `key` names the manifest of ONE incarnation,
+    * not just the id: a table deleted and recreated at the same path
+    * restarts its ids at 0, and a memo keyed by id alone would serve the
+    * old table. */
+  final case class Listed(commit: Commit, table: String) {
+    def key: String = s"$table/${commit.id}"
   }
 
   private def commitsDir(tablePath: Path) = new Path(tablePath, "_commits")
@@ -72,7 +74,7 @@ object TableLog {
   /** None for a torn manifest (no `end` sentinel / bad header): either a
     * writer crashed mid-create or we are reading concurrently with one —
     * in both cases the commit has not happened. */
-  private def parseUncached(fs: FileSystem, p: Path): Option[Commit] = {
+  private def parseUncached(fs: FileSystem, p: Path): Option[Listed] = {
     val body = new String(readAll(fs, p), StandardCharsets.UTF_8)
     val lines = body.linesIterator.toSeq
     if (!lines.headOption.contains("graft-commit-v1") ||
@@ -80,23 +82,27 @@ object TableLog {
     val kv = lines.drop(1).dropRight(1).filter(_.contains('\t')).map { l =>
       val i = l.indexOf('\t'); (l.substring(0, i), l.substring(i + 1))
     }
-    Some(Commit(
+    Some(Listed(Commit(
       id = p.getName.stripSuffix(".commit").toLong,
       reset = kv.exists { case (k, v) => k == "reset" && v == "true" },
       dataFiles = kv.collect { case ("data", v) => v },
-      statsFiles = kv.collect { case ("stats", v) => v }))
+      statsFiles = kv.collect { case ("stats", v) => v }),
+      table = kv.collectFirst { case ("table", v) => v }.getOrElse("")))
   }
 
   /** Published manifests are IMMUTABLE (created once at their final path,
     * never modified), so a successful parse is memoized by qualified path:
-    * [[commits]] then costs one directory listing instead of O(live
-    * manifests) file opens — which a streaming upsert sink pays several
-    * times per micro-batch. A hit must also match the (modification time,
-    * length) the listing reports: a table deleted and recreated at the
-    * same path restarts its ids at 0, so the NAME alone would serve the
-    * old table's commits. Only Some results are cached: a torn manifest
-    * may be a concurrent writer mid-create whose `end` sentinel lands
-    * later (exclusive-create seam), so None must be re-read. Least
+    * [[commits]] then costs one directory listing and ONE manifest read
+    * instead of O(live manifests) file opens — which a streaming upsert
+    * sink pays several times per micro-batch. The one read is the newest
+    * valid manifest, never served from the memo: a hit on an older one
+    * counts only if it names the same table incarnation. A table deleted
+    * and recreated at the same path restarts its ids at 0 under a new
+    * incarnation, so the old table's parses all miss — whatever
+    * modification times and lengths the file system reports (an object
+    * store may report none). Only valid parses are cached: a torn
+    * manifest may be a concurrent writer mid-create whose `end` sentinel
+    * lands later (exclusive-create seam), so it must be re-read. Least
     * recently used entries are evicted past [[ParseCacheMax]]. */
   private val ParseCacheMax = 65536
   private val parseCache = lru[String, Listed](ParseCacheMax)
@@ -109,16 +115,23 @@ object TableLog {
           size() > cap
       })
 
-  private def parse(fs: FileSystem, st: FileStatus): Option[Listed] = {
-    val key = fs.makeQualified(st.getPath).toString
-    val hit = parseCache.get(key)
-    if (hit != null && hit.mtime == st.getModificationTime && hit.len == st.getLen) Some(hit)
-    else {
-      val r = parseUncached(fs, st.getPath)
-        .map(Listed(_, st.getModificationTime, st.getLen))
-      r.foreach(parseCache.put(key, _))
-      r
-    }
+  private def parseFresh(fs: FileSystem, p: Path): Option[Listed] = {
+    val r = parseUncached(fs, p)
+    r.foreach(parseCache.put(fs.makeQualified(p).toString, _))
+    r
+  }
+
+  private def parse(fs: FileSystem, p: Path, table: String): Option[Listed] =
+    Option(parseCache.get(fs.makeQualified(p).toString)).filter(_.table == table)
+      .orElse(parseFresh(fs, p))
+
+  /** Valid manifests among `names` (sorted ascending): the newest read
+    * fresh, the older ones from the memo when they name its incarnation. */
+  private def validOf(fs: FileSystem, names: Seq[Path]): Seq[Listed] = {
+    var i = names.length - 1
+    var newest: Option[Listed] = None
+    while (newest.isEmpty && i >= 0) { newest = parseFresh(fs, names(i)); i -= 1 }
+    newest.fold(Seq.empty[Listed])(n => names.take(i + 1).flatMap(parse(fs, _, n.table)) :+ n)
   }
 
   private def readAll(fs: FileSystem, p: Path): Array[Byte] = {
@@ -137,15 +150,16 @@ object TableLog {
   def commits(fs: FileSystem, tablePath: Path): Seq[Commit] =
     listed(fs, tablePath).map(_.commit)
 
-  /** [[commits]] with each manifest's listing stamp (see [[Listed]]). */
+  /** [[commits]] with each manifest's table incarnation (see [[Listed]]). */
   def listed(fs: FileSystem, tablePath: Path): Seq[Listed] = {
     val dir = commitsDir(tablePath)
     if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir)
-      .filter(_.getPath.getName.endsWith(".commit"))
-      .sortBy(_.getPath.getName)
-      .flatMap(parse(fs, _)).toSeq
+    else validOf(fs, manifestsIn(fs, dir))
   }
+
+  private def manifestsIn(fs: FileSystem, dir: Path): Seq[Path] =
+    fs.listStatus(dir).map(_.getPath).filter(_.getName.endsWith(".commit"))
+      .sortBy(_.getName).toSeq
 
   /** Effective committed file sets from an already-read commit list:
     * union of commits after the last reset (data paths relative to the
@@ -189,7 +203,10 @@ object TableLog {
     * .ConditionalPutStub]] and its scaladoc) — there manifests appear
     * atomically whole, and the sentinel check simply never fires.
     * Same-process writers (the [[graft.jobs.JobRegistry]] case) are
-    * additionally serialized by the JVM lock. */
+    * additionally serialized by the JVM lock. Every manifest names the
+    * table incarnation it belongs to (a random id drawn by the table's
+    * first commit, carried over by each later one), so memos keyed by
+    * [[Listed.key]] never mistake a recreated table for the old one. */
   def publish(fs: FileSystem, tablePath: Path, dataFiles: Seq[String],
       statsFiles: Seq[String], reset: Boolean = false,
       store: ManifestStore = ManifestStore.ExclusiveCreate): Long = {
@@ -197,21 +214,25 @@ object TableLog {
     lock.synchronized {
       val dir = commitsDir(tablePath)
       fs.mkdirs(dir)
-      val body = new StringBuilder("graft-commit-v1\n")
-      if (reset) body.append("reset\ttrue\n")
-      dataFiles.foreach(f => body.append("data\t").append(f).append('\n'))
-      statsFiles.foreach(f => body.append("stats\t").append(f).append('\n'))
-      body.append("end\n")
-      val bytes = body.toString.getBytes(StandardCharsets.UTF_8)
       var attempt = 0
       var committed = -1L
       while (committed < 0) {
-        val id = fs.listStatus(dir).map(_.getPath.getName)
-          .filter(_.endsWith(".commit"))
-          .map(_.stripSuffix(".commit").toLong)
-          .sorted.lastOption.map(_ + 1).getOrElse(0L)
+        val names = manifestsIn(fs, dir)
+        val id = names.map(_.getName.stripSuffix(".commit").toLong).maxOption
+          .map(_ + 1).getOrElse(0L)
+        // the incarnation carries over from the newest valid manifest; a
+        // table's first commit starts a new one
+        val table = validOf(fs, names).lastOption.map(_.table)
+          .getOrElse(java.util.UUID.randomUUID().toString)
+        val body = new StringBuilder("graft-commit-v1\n")
+        if (table.nonEmpty) body.append("table\t").append(table).append('\n')
+        if (reset) body.append("reset\ttrue\n")
+        dataFiles.foreach(f => body.append("data\t").append(f).append('\n'))
+        statsFiles.foreach(f => body.append("stats\t").append(f).append('\n'))
+        body.append("end\n")
         val target = new Path(dir, f"$id%020d.commit")
-        if (store.putIfAbsent(fs, target, bytes)) committed = id
+        if (store.putIfAbsent(fs, target, body.toString.getBytes(StandardCharsets.UTF_8)))
+          committed = id
         else {
           // lost the id to a concurrent writer (other JVM): take the next
           attempt += 1

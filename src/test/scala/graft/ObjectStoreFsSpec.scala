@@ -319,6 +319,27 @@ class ObjectStoreFsSpec extends AnyFunSuite {
     }
   }
 
+  test("a table recreated at the same path on the object store reads its own commits") {
+    withStore { (fs, root) =>
+      // the store reports no modification time, and these manifests have
+      // equal lengths: only the table incarnation tells them apart
+      val tp = new Path(s"$root/t")
+      TableLog.publish(fs, tp, Seq("a.parquet"), Nil, store = ManifestStore.HttpConditionalPut)
+      TableLog.publish(fs, tp, Seq("b.parquet"), Nil, store = ManifestStore.HttpConditionalPut)
+      val old = TableLog.listed(fs, tp)
+      assert(old.map(_.commit.dataFiles) == Seq(Seq("a.parquet"), Seq("b.parquet")))
+      assert(old.map(_.table).distinct.size == 1, "one incarnation per table")
+      assert(fs.delete(tp, true))
+      TableLog.publish(fs, tp, Seq("c.parquet"), Nil, store = ManifestStore.HttpConditionalPut)
+      TableLog.publish(fs, tp, Seq("d.parquet"), Nil, store = ManifestStore.HttpConditionalPut)
+      val recreated = TableLog.listed(fs, tp)
+      assert(recreated.map(_.commit.id) == old.map(_.commit.id), "ids restart at 0")
+      assert(TableLog.effective(fs, tp)._1 == Seq("c.parquet", "d.parquet"))
+      assert(recreated.map(_.key).intersect(old.map(_.key)).isEmpty,
+        "snapshot keys of the recreated table must not match the old table's")
+    }
+  }
+
   test("full log lifecycle on the object store: publish, promote, checkpoint, vacuum") {
     withStore { (fs, root) =>
       val tp = new Path(s"$root/t")
