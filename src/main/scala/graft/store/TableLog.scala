@@ -134,6 +134,23 @@ object TableLog {
     newest.fold(Seq.empty[Listed])(n => names.take(i + 1).flatMap(parse(fs, _, n.table)) :+ n)
   }
 
+  /** The manifest names in `dir` (ascending) and the valid manifests among
+    * them. A manifest that vanishes between the listing and its read was
+    * superseded by a reset and removed by [[vacuum]] (the newest is read on
+    * every scan, so a reader racing a squash meets this), and the directory
+    * is listed again. */
+  @scala.annotation.tailrec
+  private def scan(fs: FileSystem, dir: Path, attempt: Int = 1): (Seq[Path], Seq[Listed]) = {
+    val names = manifestsIn(fs, dir)
+    val valid =
+      try Some(validOf(fs, names))
+      catch { case _: java.io.FileNotFoundException if attempt < 10 => None }
+    valid match {
+      case Some(v) => (names, v)
+      case None => scan(fs, dir, attempt + 1)
+    }
+  }
+
   private def readAll(fs: FileSystem, p: Path): Array[Byte] = {
     val in = fs.open(p)
     try {
@@ -154,7 +171,7 @@ object TableLog {
   def listed(fs: FileSystem, tablePath: Path): Seq[Listed] = {
     val dir = commitsDir(tablePath)
     if (!fs.exists(dir)) Seq.empty
-    else validOf(fs, manifestsIn(fs, dir))
+    else scan(fs, dir)._2
   }
 
   private def manifestsIn(fs: FileSystem, dir: Path): Seq[Path] =
@@ -217,12 +234,12 @@ object TableLog {
       var attempt = 0
       var committed = -1L
       while (committed < 0) {
-        val names = manifestsIn(fs, dir)
+        val (names, valid) = scan(fs, dir)
         val id = names.map(_.getName.stripSuffix(".commit").toLong).maxOption
           .map(_ + 1).getOrElse(0L)
         // the incarnation carries over from the newest valid manifest; a
         // table's first commit starts a new one
-        val table = validOf(fs, names).lastOption.map(_.table)
+        val table = valid.lastOption.map(_.table)
           .getOrElse(java.util.UUID.randomUUID().toString)
         val body = new StringBuilder("graft-commit-v1\n")
         if (table.nonEmpty) body.append("table\t").append(table).append('\n')

@@ -318,6 +318,32 @@ class TableLogSpec extends AnyFunSuite {
     assert(TableLog.checkpoint(f, tp) == -1L)
   }
 
+  test("a reader listing while a squash vacuums the log reads the new head") {
+    val root = SparkTestSession.tempDir("tlog-squash-race")
+    val local = fs(root)
+    val tp = new Path(s"$root/t")
+    val sp = new Path(s"$root/t__stats")
+    (0 until 3).foreach(i => TableLog.publish(local, tp, Seq(s"f$i.parquet"), Nil))
+    // a writer squashes and vacuums right after the reader's listing,
+    // before the reader opens the manifests it listed
+    var armed = true
+    val racing = new org.apache.hadoop.fs.FilterFileSystem(local) {
+      override def listStatus(p: Path): Array[org.apache.hadoop.fs.FileStatus] = {
+        val r = super.listStatus(p)
+        if (armed && p.getName == "_commits") {
+          armed = false
+          assert(TableLog.checkpoint(local, tp) >= 0)
+          TableLog.vacuum(local, tp, sp)
+        }
+        r
+      }
+    }
+    val seen = TableLog.listed(racing, tp)
+    assert(!armed, "the squash ran between listing and read")
+    assert(seen.map(_.commit.id) == Seq(3L) && seen.head.commit.reset)
+    assert(TableLog.effectiveFrom(seen.map(_.commit))._1 == Seq("f0.parquet", "f1.parquet", "f2.parquet"))
+  }
+
   test("maybeCheckpoint fires at the cadence and keeps listing bounded") {
     val root = SparkTestSession.tempDir("tlog-cadence")
     val f = fs(root)
